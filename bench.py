@@ -10,7 +10,7 @@ __spark_entry__ operator suite at $SPARK_GRAFT_SF_DIR.
 
 Environment knobs:
   SPARK_GRAFT_SF_DIR   parquet dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] parallelism (default 32)
+  SPARK_GRAFT_CPUS     local[N] parallelism (default: the CPUs this process may use)
   BENCH_FRONTIER_N     frontier size override (default 20M * sf)
 
 Prints ONE JSON line on stdout. Run at two parallelism levels (e.g.
@@ -305,7 +305,9 @@ ENTRY_QUERIES = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from crawl4ai_spark.session import box_cpus
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or box_cpus())
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:

@@ -66,6 +66,10 @@ BLOOM_SCHEMA = T.StructType(
 
 _K = 4  # hash functions (double hashing)
 
+# a bloom up to this size is merged on the driver and broadcast (no shuffle
+# for definitely-new rows); a bigger one is tested shard-locally by cogroup
+BLOOM_BROADCAST_MAX_BYTES = 256 << 20
+
 
 def _positions(h1: np.ndarray, h2: np.ndarray, m_bits: int) -> np.ndarray:
     """k positions per item via double hashing: (h1 + i*h2) mod m."""
@@ -154,6 +158,18 @@ def merge_blooms(blooms: DataFrame) -> DataFrame:
     return blooms.groupBy("bloom_part").applyInPandas(merge, BLOOM_SCHEMA)
 
 
+_STAMPS = ("fmt_version", "n_partitions", "m_bits")
+
+
+def _stale(rows, n_partitions: int | None, m_bits: int | None) -> bool:
+    """Any collected shard row stamped with another hash scheme or (when
+    expected values are given) another geometry.  A NULL stamp (a shard
+    written before the stamp existed) never equals the expected value, so
+    a MIXED shard set fails too."""
+    expected = {"fmt_version": BLOOM_FORMAT_VERSION, "n_partitions": n_partitions, "m_bits": m_bits}
+    return any(r[c] != v for r in rows for c, v in expected.items() if v is not None)
+
+
 def bloom_version_ok(
     blooms: DataFrame | None,
     n_partitions: int | None = None,
@@ -171,32 +187,10 @@ def bloom_version_ok(
     rebuild from the seen table on any mismatch."""
     if blooms is None:
         return True
-    cols = blooms.columns
-    if "fmt_version" not in cols:
-        return False
-    if (n_partitions is not None or m_bits is not None) and (
-        "n_partitions" not in cols or "m_bits" not in cols
-    ):
-        return False  # pre-geometry-stamp shards: geometry unverifiable
-    # NULL-safe: a MIXED shard set (new deltas + column-less/pre-version
-    # files read as NULL) must fail — min/max skip NULLs, which is
-    # exactly the false-negative case this guard exists to catch
-    checks = [(F.col("fmt_version"), BLOOM_FORMAT_VERSION)]  # (column, expected)
-    if n_partitions is not None:
-        checks.append((F.col("n_partitions"), int(n_partitions)))
-    if m_bits is not None:
-        checks.append((F.col("m_bits").cast("long"), int(m_bits)))
-    aggs = [F.count("*").alias("n")]
-    for i, (c, _) in enumerate(checks):
-        v = F.coalesce(c, F.lit(-1))
-        aggs += [F.min(v).alias(f"lo{i}"), F.max(v).alias(f"hi{i}")]
-    row = blooms.agg(*aggs).first()
-    if int(row["n"]) == 0:
-        return True  # empty bloom table
-    return all(
-        int(row[f"lo{i}"]) == int(row[f"hi{i}"]) == exp
-        for i, (_, exp) in enumerate(checks)
-    )
+    needed = ["fmt_version"] + [c for c, v in zip(_STAMPS[1:], (n_partitions, m_bits)) if v is not None]
+    if not set(needed) <= set(blooms.columns):
+        return False  # pre-version / pre-geometry-stamp shards: unverifiable
+    return not _stale(blooms.select(*needed).collect(), n_partitions, m_bits)
 
 
 def bloom_maybe_seen(
@@ -233,6 +227,68 @@ def bloom_maybe_seen(
     )
 
 
+def bloom_shards(
+    blooms: DataFrame, n_partitions: int, m_bits: int
+) -> dict[int, np.ndarray] | None:
+    """Collect the persisted shards to the driver (one job) and OR each
+    shard's deltas together, for :func:`bloom_tag`.  The collected rows
+    double as the version/geometry guard of :func:`bloom_version_ok`:
+    ``None`` when any row is stamped with another hash scheme or geometry
+    (or predates the stamps) — callers must rebuild from the seen table."""
+    if not set(_STAMPS) <= set(blooms.columns):
+        return None
+    rows = blooms.select("bloom_part", "bits", *_STAMPS).collect()
+    if _stale(rows, int(n_partitions), int(m_bits)):
+        return None
+    return merge_shard_rows(rows)
+
+
+def merge_shard_rows(rows) -> dict[int, np.ndarray]:
+    """bloom_part -> OR of that shard's bit arrays over ``rows``."""
+    shards: dict[int, np.ndarray] = {}
+    for r in rows:
+        arr = np.frombuffer(r["bits"], np.uint8)
+        p = int(r["bloom_part"])
+        shards[p] = arr.copy() if p not in shards else (shards[p] | arr)
+    return shards
+
+
+def tag_seen(
+    candidates: DataFrame,
+    seen: DataFrame | None,
+    url_col: str = "url",
+    seen_col: str = "url",
+    maybe_col: str | None = None,
+) -> DataFrame:
+    """Candidates plus a ``dedup_hit`` boolean: True iff the URL is
+    already in the seen set.  Exact: a prefilter only decides which rows
+    skip the seen-table join.
+
+    ``maybe_col`` names a prefilter's verdict column (``maybe_seen`` from
+    :func:`bloom_tag` / :func:`bloom_maybe_seen`): rows where it is false
+    are tagged False without a join, and only the maybe-seen minority is
+    left-joined against the seen keys.  The column is dropped.  Both
+    branches read the candidates' plan, so a shuffle below it is reused,
+    not recomputed."""
+    if seen is None:
+        out = candidates.withColumn("dedup_hit", F.lit(False))
+        return out if maybe_col is None else out.drop(maybe_col)
+    hits = seen.select(F.col(seen_col).alias(url_col)).distinct().withColumn(
+        "dedup_hit", F.lit(True)
+    )
+
+    def probe(df: DataFrame) -> DataFrame:
+        return df.join(hits, url_col, "left").withColumn(
+            "dedup_hit", F.coalesce(F.col("dedup_hit"), F.lit(False))
+        )
+
+    if maybe_col is None:
+        return probe(candidates)
+    fresh = candidates.filter(~F.col(maybe_col)).drop(maybe_col)
+    maybe = candidates.filter(F.col(maybe_col)).drop(maybe_col)
+    return fresh.withColumn("dedup_hit", F.lit(False)).unionByName(probe(maybe))
+
+
 def anti_join_seen(
     candidates: DataFrame,
     seen: DataFrame | None,
@@ -240,9 +296,10 @@ def anti_join_seen(
     blooms: DataFrame | None = None,
     seen_col: str = "url",
     n_partitions: int = 32,
-    bloom_broadcast_max_bytes: int = 256 << 20,
+    bloom_broadcast_max_bytes: int = BLOOM_BROADCAST_MAX_BYTES,
 ) -> DataFrame:
-    """Candidates not yet in the seen set.
+    """Candidates not yet in the seen set (:func:`tag_seen` minus the
+    hits).
 
     With a bloom pre-filter: definitely-new rows bypass the exact join;
     only maybe-seen rows shuffle against the seen table. Without: plain
@@ -256,35 +313,26 @@ def anti_join_seen(
     """
     if seen is None:
         return candidates
-    seen_keys = seen.select(F.col(seen_col).alias(url_col)).distinct()
     if blooms is None:
+        seen_keys = seen.select(F.col(seen_col).alias(url_col)).distinct()
         return candidates.join(seen_keys, url_col, "left_anti")
     total = blooms.agg(F.sum(F.length("bits"))).first()[0] or 0
     if total <= bloom_broadcast_max_bytes:
-        tagged = _bloom_tag_broadcast(candidates, blooms, url_col, n_partitions)
-        # no shuffle boundary below the mapInPandas → the fresh/maybe
-        # branch split would re-run the whole upstream twice; pin it once
-        tagged = tagged.localCheckpoint(eager=False)
+        tagged = bloom_tag(candidates, merge_shard_rows(blooms.collect()), url_col, n_partitions)
     else:
-        # the cogroup's own groupBy exchange is reused by both branches
         tagged = bloom_maybe_seen(candidates, blooms, url_col, n_partitions=n_partitions)
-    fresh = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return fresh.unionByName(maybe.join(seen_keys, url_col, "left_anti"))
+    return tag_seen(tagged, seen, url_col, seen_col, maybe_col="maybe_seen").filter(
+        ~F.col("dedup_hit")
+    ).drop("dedup_hit")
 
 
-def _bloom_tag_broadcast(
-    candidates: DataFrame, blooms: DataFrame, url_col: str, n_partitions: int
+def bloom_tag(
+    candidates: DataFrame, shards: dict[int, np.ndarray], url_col: str = "url", n_partitions: int = 32
 ) -> DataFrame:
     """Shuffle-free bloom tag: merged shards broadcast to executors,
     candidates tested in-place by mapInPandas (vectorized numpy).
     ``n_partitions`` must be the shard count the bloom was built with —
     routing uses the identical pmod(murmur3(url)) expression."""
-    shards: dict[int, np.ndarray] = {}
-    for r in blooms.collect():
-        arr = np.frombuffer(r["bits"], np.uint8)
-        p = int(r["bloom_part"])
-        shards[p] = arr.copy() if p not in shards else (shards[p] | arr)
     bc = candidates.sparkSession.sparkContext.broadcast(shards)
     with_part = _with_bloom_keys(candidates, url_col, n_partitions)
     out_schema = T.StructType(

@@ -60,9 +60,9 @@ def _join_host_state(
 
     The reference's DomainState dict is unbounded (async_dispatcher.py:
     46-50), so host_state is O(distinct hosts) — small for a site crawl,
-    multi-GB at 10^7 hosts.  A known-small row count (callers track it in
-    lineage) keeps the explicit broadcast hint; otherwise the hint is
-    omitted and AQE elects broadcast-vs-shuffle from the RUNTIME size —
+    multi-GB at 10^7 hosts.  A known-small row count (CrawlJob reads it
+    from the snapshot's recorded row counts) keeps the explicit broadcast
+    hint; otherwise the hint is omitted and AQE elects broadcast-vs-shuffle from the RUNTIME size —
     the join is a plain equi-join on ``host`` either way."""
     hs = host_state
     if host_state_rows is not None and host_state_rows <= BROADCAST_HOST_STATE_MAX_ROWS:
@@ -204,6 +204,7 @@ def per_host_topk(
     salt_buckets: int = 16,
     salt_col: str = "url",
     keep_tail: bool = False,
+    eligible_col: str | None = None,
 ) -> DataFrame:
     """Two-phase salted per-host top-K → ``rank_in_host`` column (1-based).
 
@@ -212,39 +213,40 @@ def per_host_topk(
     the ≤ k*salt_buckets survivors per host — tiny by construction.
 
     With ``keep_tail`` rows beyond the top-K are returned too, with a
-    NULL ``rank_in_host`` — tagged, never dropped, with exactly one
-    upstream evaluation: rank>K survivors are NULLed in place (no extra
-    branch), and the phase-1 output is pinned with a lazy localCheckpoint
-    before the survivors/tail split.  The pin matters: Spark 4's
-    WindowGroupLimit pushdown rewrites the rank-filtered branch's
-    exchange *input*, so the two branches' exchanges are no longer
-    identical subplans and exchange reuse silently stops applying
-    (verified on the executed plan — 0 ReusedExchange without the pin).
-    Requires ``df`` rows unique per ``salt_col`` (the frontier's
-    canonical-URL invariant) for the split to be deterministic under
+    NULL ``rank_in_host`` — tagged, never dropped, in ONE branch (no
+    survivors/tail split, so nothing upstream runs twice and no pin is
+    needed): phase 2 partitions by (host, -1) for a host's phase-1
+    survivors and by (host, salt) for its tail, so the survivors rank
+    together exactly as in the dropping form while a hot host's tail stays
+    spread over its salt slices; ranks of tail rows and ranks > K are
+    NULLed.  Requires ``df`` rows unique per ``salt_col`` (the frontier's
+    canonical-URL invariant) for the ranking to be deterministic under
     ties.
+
+    ``eligible_col`` names a boolean column; rows where it is false are
+    never ranked (dropped, or NULL rank with ``keep_tail``) and take no
+    slot from their host.  It lets a gate computed upstream (robots) split
+    its rows off AFTER this shuffle, so the gate runs once.
     """
     order_cols = order_cols or queue_order()
     salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_col)), F.lit(salt_buckets)))
-    w1 = Window.partitionBy("host", "_salt").orderBy(*order_cols)
+    part1 = ["host", "_salt"] + ([eligible_col] if eligible_col else [])
+    w1 = Window.partitionBy(*part1).orderBy(*order_cols)
     w2 = Window.partitionBy("host").orderBy(*order_cols)
     stage1 = salted.withColumn("_prn", F.row_number().over(w1))
+    surv = F.col("_prn") <= k
+    if eligible_col:
+        surv = surv & F.col(eligible_col)
     if not keep_tail:
-        surv = stage1.filter(F.col("_prn") <= k)
-        ranked = surv.withColumn("rank_in_host", F.row_number().over(w2))
+        ranked = stage1.filter(surv).withColumn("rank_in_host", F.row_number().over(w2))
         return ranked.filter(F.col("rank_in_host") <= k).drop("_salt", "_prn")
-    stage1 = stage1.localCheckpoint(eager=False)
-    null_rank = F.lit(None).cast("int")
-    ranked = (
-        stage1.filter(F.col("_prn") <= k)
-        .withColumn("rank_in_host", F.row_number().over(w2))
-        .withColumn(
-            "rank_in_host",
-            F.when(F.col("rank_in_host") <= k, F.col("rank_in_host")).otherwise(null_rank),
-        )
+    w2_tail = Window.partitionBy("host", F.when(surv, F.lit(-1)).otherwise(F.col("_salt"))).orderBy(
+        *order_cols
     )
-    tail = stage1.filter(F.col("_prn") > k).withColumn("rank_in_host", null_rank)
-    return ranked.unionByName(tail).drop("_salt", "_prn")
+    rank = F.row_number().over(w2_tail)
+    return stage1.withColumn(
+        "rank_in_host", F.when(surv & (rank <= k), rank).otherwise(F.lit(None).cast("int"))
+    ).drop("_salt", "_prn")
 
 
 def salted_range_partition(df: DataFrame, n_partitions: int, salt_buckets: int = 16) -> DataFrame:
@@ -271,6 +273,7 @@ def schedule_wave(
     default_delay: float = 1.0,
     salt_buckets: int = 16,
     host_state_rows: int | None = None,
+    eligible_col: str | None = None,
 ) -> DataFrame:
     """Assign ``scheduled_offset`` per row and ``admitted`` flag.
 
@@ -279,6 +282,8 @@ def schedule_wave(
     rows beyond the wave budget are carried (admitted = false).
     ``host_state_rows``: pass a known row count to size-gate the
     host-state broadcast (see ``_join_host_state``); None lets AQE pick.
+    ``eligible_col``: rows where this boolean column is false pass through
+    unranked and not admitted (see :func:`per_host_topk`).
     """
     if host_state is not None:
         frontier = _join_host_state(frontier, host_state, host_state_rows)
@@ -293,7 +298,9 @@ def schedule_wave(
     # rows beyond K come back with NULL rank (keep_tail) and carry to the
     # next wave — a host with more queued URLs than K never loses its tail
     k = max(int(wave_budget / max(default_delay * 0.25, 1e-9)), 1)
-    ranked = per_host_topk(frontier, k, salt_buckets=salt_buckets, keep_tail=True)
+    ranked = per_host_topk(
+        frontier, k, salt_buckets=salt_buckets, keep_tail=True, eligible_col=eligible_col
+    )
     ready = F.greatest(
         F.coalesce(F.col("last_request_time") + delay - F.lit(wave_start), F.lit(0.0)),
         F.lit(0.0),
@@ -331,36 +338,36 @@ def update_host_state(
     / lower bound so two runs produce identical schedules.
     Cross-checked against the reference class itself
     (tests/test_reference_crosscheck.py).
-    """
-    cols = ["host", "status_code", "scheduled_offset"]
-    src = wave_results.select(*cols)
-    if host_state is not None:
-        src = _join_host_state(src, host_state, host_state_rows)
-    else:
-        src = (
-            src.withColumn("last_request_time", F.lit(None).cast("double"))
-            .withColumn("current_delay", F.lit(None).cast("double"))
-            .withColumn("fail_count", F.lit(None).cast("int"))
-        )
 
-    # One aggregation gathers each host's wave events in scheduled order
+    ``host_state_rows`` is accepted for symmetry with
+    :func:`schedule_wave` and unused: the state is read through the
+    events' own shuffle, never broadcast.
+    """
+    # ONE shuffle gathers, per host, the wave's events in scheduled order
     # (offsets are distinct per host by construction — the scheduler
-    # assigns rank-spaced timestamps — so the struct sort IS the
-    # scheduled order), then ONE Arrow batch folds many hosts per Python
-    # call.  The previous per-group applyInPandas paid ~5 ms of pandas
-    # overhead per HOST (seconds per wave at 10^3 hosts, hours at 10^7).
-    grouped = src.groupBy("host").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("scheduled_offset").alias("off"),
-                    F.col("status_code").alias("sc"),
-                )
-            )
-        ).alias("evs"),
-        F.first("current_delay").alias("current_delay"),
-        F.first("fail_count").alias("fail_count"),
+    # assigns rank-spaced timestamps — so the struct sort IS the scheduled
+    # order) AND the host's prior state: events and state rows are unioned
+    # before the groupBy, so no join and no second pass over the fold's
+    # output.  Then ONE Arrow batch folds many touched hosts per Python
+    # call (a per-group applyInPandas paid ~5 ms of pandas overhead per
+    # HOST: seconds per wave at 10^3 hosts, hours at 10^7); untouched
+    # hosts pass through in the JVM.  Both branches read the same shuffle.
+    ev = F.struct(
+        F.col("scheduled_offset").alias("off"), F.col("status_code").alias("sc")
+    ).alias("ev")
+    state_fields = HOST_STATE_SCHEMA.fields[1:]
+    state_cols = [f.name for f in state_fields]
+    rows = wave_results.select(
+        "host", ev, *[F.lit(None).cast(f.dataType).alias(f.name) for f in state_fields]
     )
+    if host_state is not None:
+        no_ev = F.lit(None).cast(rows.schema["ev"].dataType).alias("ev")
+        rows = rows.unionByName(host_state.select("host", no_ev, *state_cols))
+    grouped = rows.groupBy("host").agg(
+        F.sort_array(F.collect_list("ev")).alias("evs"),  # state rows' NULL ev is skipped
+        *[F.first(c, ignorenulls=True).alias(c) for c in state_cols],
+    )
+    touched = F.size("evs") > 0
 
     def gen(batches):
         import zlib
@@ -401,11 +408,7 @@ def update_host_state(
                 columns=["host", "last_request_time", "current_delay", "fail_count"],
             )
 
-    updated = grouped.mapInPandas(gen, HOST_STATE_SCHEMA)
+    updated = grouped.filter(touched).mapInPandas(gen, HOST_STATE_SCHEMA)
     if host_state is None:
         return updated
-    # pin: the anti-join's build side and the union branch must not each
-    # re-run the fold
-    updated = updated.localCheckpoint(eager=False)
-    untouched = host_state.join(updated.select("host"), "host", "left_anti")
-    return untouched.unionByName(updated)
+    return grouped.filter(~touched).select("host", *state_cols).unionByName(updated)

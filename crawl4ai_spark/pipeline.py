@@ -5,10 +5,40 @@ One scheduling wave (SURVEY §3.3's Spark-native main loop):
     frontier ──robots gate──► schedule (per-host token bucket, salted
     top-K) ──► fetch (pandas-UDF / corpus join) ──► scrape (links +
     image refs) ──► image payload emit (decode/validate → payload table)
-    ──► expand (canonicalize → bloom prefilter → exact anti-join seen →
+    ──► expand (canonicalize → bloom prefilter → exact seen-set probe →
     filter/score) ──► next frontier (carried + retries + discoveries)
     ──► host-state backoff update ──► snapshot commit (+ lineage row per
     partition)
+
+How a wave runs on Spark.  The wave is a few lazy plans; its only
+actions are one small collect of the bloom shards and the concurrent
+table writes of ``SnapshotCatalog.commit_wave`` (frontier, host_state,
+seen, bloom, results, lineage, plus the emit planes' tables).  Nothing
+counts rows: every ``WaveStats`` counter comes from an ``Observation`` on
+a frame the commit writes (the wave's fate counts on the results write,
+discovered/dedup-hit counts on the seen write, a row count on every
+write), and the commit stores them in the snapshot before the manifest
+rename, so ``run()`` reads the frontier size, the host-state size and the
+pages crawled so far from the manifest.
+
+Two frames are pinned, with a lazy ``localCheckpoint`` that the first
+write to reach a block computes and the others read.  The pins are
+planned with adaptive execution off: under AQE every query stage is a
+Spark job of its own, run at definition time (37 of a wave's 58 jobs
+were), while the writes keep AQE to coalesce the small deltas:
+
+* the fetched wave — every frontier row with its fate (fetched, carried,
+  denied by robots, no matching config) — because the fetch must run
+  once (in production a second evaluation is a second request) and the
+  results, frontier and host-state writes all read it.  The robots and
+  config gates ride through the schedule as an eligibility column, so
+  their UDFs run once, below the schedule's shuffle;
+* the expansion — the scrape + canonicalize Python pass, the bloom
+  verdict and the seen-set probe — because the seen, bloom, frontier and
+  lineage writes all read it and the Python pass must run once.
+
+The image and PDF emit planes keep an eager pin on their payloads (their
+decode passes read the payload twice).
 
 Relationship to traversal.CrawlEngine: CrawlEngine is the *parity*
 engine (exact reference ordering semantics, oracle-tested); CrawlJob is
@@ -29,15 +59,26 @@ from __future__ import annotations
 
 import math
 import time
-from dataclasses import dataclass, field
+from contextlib import contextmanager
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .functions.urls import host_expr, is_valid_url_expr, normalize_deep_udf
 from .operators import scrape
-from .operators.dedup import anti_join_seen, bloom_version_ok, build_bloom
+from .operators.dedup import (
+    BLOOM_BROADCAST_MAX_BYTES,
+    BLOOM_SCHEMA,
+    bloom_maybe_seen,
+    bloom_shards,
+    bloom_version_ok,
+    bloom_tag,
+    build_bloom,
+    merge_shard_rows,
+    tag_seen,
+)
 from .operators.scheduler import (
     priority_bucket_expr,
     robots_gate,
@@ -46,6 +87,9 @@ from .operators.scheduler import (
     update_host_state,
 )
 from .sources.catalog import SnapshotCatalog, lineage_from_wave
+
+# a wave row's fate (the pinned wave frame's ``_kind``)
+_FETCHED, _CARRIED, _DENIED, _UNMATCHED = "fetched", "carried", "denied", "unmatched"
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -87,7 +131,6 @@ class JobConfig:
     dedup_n_perm: int = 16
     dedup_bands: int = 4
     dedup_shingle_n: int = 3
-    durable_tmp: bool = False  # parquet (vs executor-local) intra-wave checkpoints
     markdown_fit_mode: str | None = None  # None | "pruning" | "bm25"
     markdown_query: str | None = None  # bm25 fit query
     n_partitions: int = 0  # 0 → defaultParallelism
@@ -104,6 +147,21 @@ class WaveStats:
     dedup_hits: int
     images: int
     duration_ms: int
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, conf: dict):
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 class CrawlJob:
@@ -133,7 +191,16 @@ class CrawlJob:
     # ------------------------------------------------------------------ API
     def seed(self, seeds: DataFrame) -> DataFrame:
         """seeds(url[, priority]) → initial frontier (wave 0 snapshot).
-        Cross-source duplicate seeds collapse (async_url_seeder.py:429-459)."""
+        Cross-source duplicate seeds collapse (async_url_seeder.py:429-459).
+        The catalog root must be unused: a commit carries the previous
+        snapshot's appends forward, so seeding over an old crawl would
+        inherit its seen set and overwrite ``wave=N`` files its snapshots
+        still reference."""
+        if self.catalog.latest_snapshot() is not None:
+            raise ValueError(
+                f"catalog root {self.catalog.root} already holds a crawl; "
+                "resume it with run() or seed a fresh root"
+            )
         cfg = self.cfg
         pri = F.col("priority") if "priority" in seeds.columns else F.lit(1.0)
         base = seeds.select(
@@ -168,17 +235,18 @@ class CrawlJob:
 
     def run(self, max_waves: int | None = None) -> dict:
         """Advance waves until the frontier drains (or limits hit).
-        Restartable: always resumes from the latest snapshot."""
+        Restartable: always resumes from the latest snapshot.  The frontier
+        size and the pages crawled so far come from the snapshots' recorded
+        counts, not from a Spark job."""
         cfg = self.cfg
         max_waves = max_waves or cfg.max_waves
-        pages_crawled = self._crawled_so_far()
+        pages_crawled = sum(s.get("counters", {}).get("fetched_ok", 0) for s in self.catalog.snapshots())
         waves_done = 0
         while waves_done < max_waves and pages_crawled < cfg.max_pages:
             snap = self.catalog.latest_snapshot()
-            frontier = self.catalog.read("frontier", snap)
-            if frontier is None or frontier.limit(1).count() == 0:
+            if snap is None or self._frontier_rows(snap) == 0:
                 break
-            stats = self._wave(snap, frontier)
+            stats = self._wave(snap)
             self.stats.append(stats)
             pages_crawled += stats.fetched_ok
             waves_done += 1
@@ -191,253 +259,246 @@ class CrawlJob:
         }
 
     # ------------------------------------------------------------- the wave
-    def _wave(self, snap: dict, frontier: DataFrame) -> WaveStats:
-        cfg = self.cfg
+    def _wave(self, snap: dict) -> WaveStats:
         t0 = time.time()
-        # SPARK_CRAWL_PROFILE=1 → per-phase wall times on stderr
-        import os as _os
-        import sys as _sys
-
-        _prof = bool(_os.environ.get("SPARK_CRAWL_PROFILE"))
-        _pt = [time.time()]
-
-        def _mark(label: str) -> None:
-            if _prof:
-                now = time.time()
-                print(f"  wave phase {label}: {now - _pt[0]:.2f}s", file=_sys.stderr, flush=True)
-                _pt[0] = now
-
         wave_id = int(snap["wave_id"]) + 1
-        host_state = self.catalog.read("host_state", snap)
-        # size-gate the host-state broadcast (scheduler._join_host_state):
-        # count() on the parquet snapshot is footer-metadata-only — cheap
-        # — and keeps the explicit broadcast for small states while a
-        # 10^7-host state falls back to an AQE-planned equi-join
-        host_state_rows = None if host_state is None else host_state.count()
-        wave_start = (wave_id - 1) * cfg.wave_budget
+        committed = self.catalog.commit_wave(wave_id, **self._plan(snap, wave_id))
+        c = committed["counters"]
+        return WaveStats(
+            wave_id=wave_id,
+            scheduled=c["scheduled"],
+            admitted=c["admitted"],
+            fetched_ok=c["fetched_ok"],
+            failed=c["failed"],
+            discovered=c["discovered"],
+            dedup_hits=c["dedup_hits"],
+            images=committed["rows"].get("images", 0),
+            duration_ms=int((time.time() - t0) * 1000),
+        )
 
-        frontier = frontier.withColumn(
+    def _plan(self, snap: dict, wave_id: int) -> dict:
+        """The wave's lazy plans, as ``commit_wave`` keyword arguments."""
+        cfg = self.cfg
+        host_state = self.catalog.read("host_state", snap)
+        # size-gates the host-state broadcast (scheduler._join_host_state)
+        # with the count the last commit recorded: a small state keeps the
+        # explicit broadcast, a 10^7-host one falls back to an AQE join
+        host_state_rows = snap.get("rows", {}).get("host_state")
+        wave_start = (wave_id - 1) * cfg.wave_budget
+        n_parts = cfg.n_partitions or self.spark.sparkContext.defaultParallelism
+
+        frontier = self.catalog.read("frontier", snap).withColumn(
             "priority_bucket",
             priority_bucket_expr(F.col("retry_count"), F.col("wait_waves"), cfg.fairness_waves),
         )
-        n_parts = cfg.n_partitions or self.spark.sparkContext.defaultParallelism
-
-        # robots gate: denials become FAILED results without a fetch.
-        # Checkpoint the gated frontier once — the denied/allowed branch
-        # split would otherwise run the robots UDF join twice.  No robots
-        # table ⇒ nothing to gate, skip the checkpoint entirely.
-        if self.robots is None:
-            gated = frontier.withColumn("robots_allowed", F.lit(True))
-        else:
-            gated = self._ckpt(robots_gate(frontier, self.robots), f"gated_{wave_id}")
-        _mark("robots_gate")
-        denied = gated.filter(~F.col("robots_allowed"))
-        allowed = gated.filter(F.col("robots_allowed")).drop("robots_allowed")
-
-        # per-URL config selection: no match ⇒ failed result (dispatcher
-        # semantics, async_dispatcher.py:241-263), row leaves the frontier
-        unmatched = None
+        # robots gate: denials become FAILED results without a fetch.  Per-
+        # URL config selection: no match ⇒ failed result (dispatcher
+        # semantics, async_dispatcher.py:241-263), the row leaves the
+        # frontier.  Gated rows ride through the schedule unranked, so the
+        # gate's UDF runs once, below the schedule's shuffle.
+        gated = robots_gate(frontier, self.robots)
+        eligible = F.col("robots_allowed")
         if self.run_configs is not None:
             from .operators.config_match import assign_config
 
-            assigned = self._ckpt(
-                assign_config(allowed, self.run_configs), f"cfgmatch_{wave_id}"
-            )
-            unmatched = assigned.filter(F.col("config_name").isNull()).drop("config_name")
-            allowed = assigned.filter(F.col("config_name").isNotNull()).drop("config_name")
-
-        # politeness schedule; carried rows age up
+            gated = assign_config(gated, self.run_configs)
+            eligible = eligible & F.col("config_name").isNotNull()
         sched = schedule_wave(
-            allowed, host_state, wave_start=wave_start, wave_budget=cfg.wave_budget,
-            default_delay=cfg.default_delay, host_state_rows=host_state_rows,
+            gated.withColumn("_eligible", eligible), host_state, wave_start=wave_start,
+            wave_budget=cfg.wave_budget, default_delay=cfg.default_delay,
+            host_state_rows=host_state_rows, eligible_col="_eligible",
         )
-        sched = self._ckpt(sched, f"sched_{wave_id}")
-        _mark("schedule")
-        admitted = sched.filter("admitted").drop("admitted")
-        carried = (
-            sched.filter(~F.col("admitted"))
-            .drop("admitted", "rank_in_host", "scheduled_offset")
-            .withColumn("wait_waves", F.col("wait_waves") + 1)
+        kind = (
+            F.when(F.col("admitted"), F.lit(_FETCHED))
+            .when(~F.col("robots_allowed"), F.lit(_DENIED))
+            .when(~F.col("_eligible"), F.lit(_UNMATCHED))
+            .otherwise(F.lit(_CARRIED))
         )
+        sched = sched.withColumn("_kind", kind).drop(
+            "admitted", "robots_allowed", "_eligible", "config_name"
+        )
+        fetched = self.fetch_fn(sched.filter(F.col("_kind") == _FETCHED).drop("_kind"))
 
-        # one aggregation job for all scheduling counters (a count() per
-        # branch would launch a separate job each — wave overhead is what
-        # bounds end-to-end crawl throughput at small corpus sizes)
-        srow = sched.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("admitted").cast("long")).alias("n_admit"),
-        ).first()
-        n_sched, n_admit = int(srow["n"]), int(srow["n_admit"] or 0)
-        _mark("sched_counts")
-        n_denied = 0 if self.robots is None else denied.count()  # scans the gated checkpoint
-        n_unmatched = 0 if unmatched is None else unmatched.count()
+        # PIN 1, the fetched wave: every row this wave decided on, tagged
+        # with its _kind (fetched / carried / denied / unmatched).  The
+        # fetch must run once — in production it is the network — and the
+        # results, frontier and host-state writes all read this one frame.
+        wave = self._pin(fetched.withColumn("_kind", F.lit(_FETCHED)).unionByName(
+            sched.filter(F.col("_kind") != _FETCHED), allowMissingColumns=True
+        ).coalesce(n_parts))
+        kind = F.col("_kind")
+        is_fetched = kind == _FETCHED
+        ok = wave.filter(is_fetched & F.col("success")).drop("_kind")
 
-        # fetch
-        fetched = self.fetch_fn(admitted)
-        fetched = self._ckpt(fetched, f"fetched_{wave_id}")
-        _mark("fetch")
-        ok = fetched.filter("success")
-        rate_limited = fetched.filter(F.col("status_code").isin(429, 503))
+        # counters ride the results write (see _results_log)
+        is_rl = F.col("status_code").isin(429, 503)
+        wave_counts = Observation()
+        results_log = self._results_log(wave.observe(
+            wave_counts,
+            F.count_if(kind.isin(_FETCHED, _CARRIED)).alias("scheduled"),
+            F.count_if(is_fetched).alias("admitted"),
+            F.count_if(is_fetched & F.col("success")).alias("fetched_ok"),
+            F.count_if(
+                kind.isin(_DENIED, _UNMATCHED)
+                | (is_fetched & ~F.col("success")
+                   & (~is_rl | (F.col("retry_count") >= cfg.max_retries)))
+            ).alias("failed"),
+        ), wave_id)
+        results_log = results_log.sortWithinPartitions("host", "url")  # clustered rows compress better
 
         # retries: requeue with retry_count+1 until max_retries (dispatcher
         # requeue semantics, async_dispatcher.py:289-317 / RateLimiter give-up)
+        frontier_cols = [f.name for f in FRONTIER_SCHEMA.fields]
         retry_rows = (
-            rate_limited.filter(F.col("retry_count") < cfg.max_retries)
-            .select(*[f.name for f in FRONTIER_SCHEMA.fields])
+            wave.filter(is_fetched & is_rl & (F.col("retry_count") < cfg.max_retries))
+            .select(*frontier_cols)
             .withColumn("retry_count", F.col("retry_count") + 1)
             .withColumn("status", F.lit("QUEUED"))
         )
-
-        is_rl = F.col("status_code").isin(429, 503)
-        frow = fetched.agg(
-            F.sum(F.col("success").cast("long")).alias("n_ok"),
-            F.sum((~F.col("success") & ~is_rl).cast("long")).alias("n_hard"),
-            F.sum((is_rl & (F.col("retry_count") >= cfg.max_retries)).cast("long")).alias("n_gaveup"),
-        ).first()
-        n_ok = int(frow["n_ok"] or 0)
-        _mark("fetch_counts")
-        n_failed = n_denied + n_unmatched + int(frow["n_hard"] or 0) + int(frow["n_gaveup"] or 0)
-
-        # results log (lineage-grade, not the payload)
-        results_log = fetched.select(
-            "url", "host", "depth", "parent_url", "status_code", "success",
-            "scheduled_offset", F.lit(wave_id).alias("wave_id"),
-        ).unionByName(
-            denied.select(
-                "url", "host", "depth", "parent_url",
-                F.lit(403).alias("status_code"), F.lit(False).alias("success"),
-                F.lit(0.0).alias("scheduled_offset"), F.lit(wave_id).alias("wave_id"),
-            )
+        carried = (
+            wave.filter(kind == _CARRIED).select(*frontier_cols)
+            .withColumn("wait_waves", F.col("wait_waves") + 1)
         )
-        if unmatched is not None:
-            # "No matching configuration found" → failed result, no fetch
-            results_log = results_log.unionByName(
-                unmatched.select(
-                    "url", "host", "depth", "parent_url",
-                    F.lit(0).alias("status_code"), F.lit(False).alias("success"),
-                    F.lit(0.0).alias("scheduled_offset"), F.lit(wave_id).alias("wave_id"),
-                )
-            )
 
-        # image payload emit
-        images_delta, n_images = None, 0
+        appends: dict = {}
+        # image payload emit (its payload pin stays: the decode/validate
+        # pass reads it twice)
         if cfg.emit_images and self.image_store is not None:
-            # pin the validated payload once: counting and the snapshot
-            # write would otherwise each run the decode/validate UDF
-            images_delta = self._ckpt(self._emit_images(ok, wave_id), f"img_delta_{wave_id}")
-            n_images = images_delta.count()
-
+            appends["images"] = self._emit_images(ok, wave_id)
         # PDF document emit: fetched pages' .pdf links resolve against the
         # pdf store and fan out to per-page text + per-image rows — the
         # reference's NaivePDFProcessorStrategy plane
         # (processors/pdf/processor.py:25-50) landing as catalog tables
-        pdf_pages_delta = pdf_images_delta = None
         if cfg.emit_pdfs and self.pdf_store is not None:
-            pdf_pages_delta, pdf_images_delta = self._emit_pdfs(ok, wave_id, snap)
-
+            appends["pdf_pages"], appends["pdf_images"] = self._emit_pdfs(ok, wave_id, snap)
         # markdown emit (reference: every CrawlResult carries .markdown —
         # markdown_generation_strategy.py:55-260; fit via content filter)
-        markdown_delta = None
         if cfg.emit_markdown:
-            markdown_delta = self._emit_markdown(ok, wave_id)
-
+            appends["markdown"] = self._emit_markdown(ok, wave_id)
         # document-dedup state emit: signatures for THIS wave's pages
         # only (anti-join inside wave_deltas), landing in the same
         # snapshot commit — the training-data near-dup path grows
         # append-only with the crawl (operators/dedup_state.py)
-        dedup_deltas: dict = {}
         if cfg.emit_doc_dedup:
-            dedup_deltas, _ = self.doc_dedup_state().wave_deltas(
-                ok, text_col="html", id_col="url"
-            )
+            appends.update(self.doc_dedup_state().wave_deltas(ok, text_col="html", id_col="url")[0])
 
-        # frontier expansion
+        # frontier expansion: PIN 2 (see _expand)
         seen = self.catalog.read("seen", snap)
-        blooms = self.catalog.read("bloom", snap) if cfg.use_bloom else None
-        bloom_rebuilt = None
-        if blooms is not None and not bloom_version_ok(
-            blooms, n_partitions=cfg.bloom_partitions, m_bits=cfg.bloom_bits
-        ):
-            # persisted shards predate the current hash scheme OR were
-            # built with a different geometry (resume across an engine
-            # upgrade / JobConfig change): stale bit positions or
-            # wrong-shard routing would yield false NEGATIVES that bypass
-            # the exact anti-join — rebuild the whole bloom from the seen
-            # table and commit it as a reset baseline so later waves
-            # don't rebuild again.
-            bloom_rebuilt = self._ckpt(
-                build_bloom(seen, n_partitions=cfg.bloom_partitions, m_bits=cfg.bloom_bits),
-                f"bloom_rebuild_{wave_id}",
-            )
-            blooms = bloom_rebuilt
-        new_rows, seen_delta, n_disc, n_dedup = self._expand(ok, seen, blooms, wave_id)
-        _mark("expand")
+        bloom, bloom_reset = self._bloom(snap, seen)
+        expanded = self._expand(ok, seen, bloom)
+        new_rows = self._new_rows(expanded.filter(~F.col("dedup_hit")), wave_id)
+        expand_counts = Observation()
+        seen_delta = expanded.observe(
+            expand_counts,
+            F.count_if(~F.col("dedup_hit")).alias("discovered"),
+            F.count_if(F.col("dedup_hit")).alias("dedup_hits"),
+        ).filter(~F.col("dedup_hit")).select(F.col("canon").alias("url"))
 
         # host state update (politeness backoff fold)
         new_host_state = update_host_state(
-            fetched.select("host", "status_code", "scheduled_offset"),
+            wave.filter(is_fetched).select("host", "status_code", "scheduled_offset"),
             host_state,
             wave_start=wave_start,
             base_delay=(cfg.default_delay, cfg.default_delay),
             max_retries=cfg.max_retries,  # freeze threshold = give-up threshold
-            host_state_rows=host_state_rows,
         )
-        _mark("host_state_def")
 
         # the salted (priority_bucket, host_hash) range layout is applied at
         # WRITE time — the scheduler's own windows re-shuffle by host, so
         # partitioning the input frontier first would just add a shuffle
         next_frontier = salted_range_partition(
             carried.unionByName(retry_rows).unionByName(new_rows), n_parts
-        )
+        ).sortWithinPartitions("host", "url")  # clustered rows compress better
 
         lineage = lineage_from_wave(
             wave_id,
-            results_log.withColumn("status", F.when(F.col("success"), "OK").otherwise("FAILED")),
-            None,
-        ).withColumn("urls_out", F.lit(n_disc).cast("long")).withColumn(
-            "dedup_hits", F.lit(n_dedup).cast("long")
-        ).withColumn("duration_ms", F.lit(int((time.time() - t0) * 1000)).cast("long"))
+            self._results_log(wave, wave_id).withColumn(
+                "status", F.when(F.col("success"), "OK").otherwise("FAILED")
+            ),
+            expanded,
+        )
 
-        appends = {"seen": seen_delta, "results": results_log, "lineage": lineage}
+        appends.update({"seen": seen_delta, "results": results_log, "lineage": lineage})
         resets = {}
         if cfg.use_bloom:
             delta_bloom = build_bloom(
-                seen_delta, n_partitions=cfg.bloom_partitions, m_bits=cfg.bloom_bits
+                new_rows.select("url"), n_partitions=cfg.bloom_partitions, m_bits=cfg.bloom_bits
             )
-            if bloom_rebuilt is not None:
-                resets["bloom"] = bloom_rebuilt.unionByName(delta_bloom)
+            if bloom_reset is not None:
+                resets["bloom"] = bloom_reset.unionByName(delta_bloom)
             else:
                 appends["bloom"] = delta_bloom
-        if images_delta is not None:
-            appends["images"] = images_delta
-        if pdf_pages_delta is not None:
-            appends["pdf_pages"] = pdf_pages_delta
-            appends["pdf_images"] = pdf_images_delta
-        if markdown_delta is not None:
-            appends["markdown"] = markdown_delta
-        appends.update(dedup_deltas)
-        self.catalog.commit_wave(
-            wave_id,
-            state={"frontier": next_frontier, "host_state": new_host_state},
-            appends=appends,
-            resets=resets or None,
-        )
-        _mark("commit")
-        return WaveStats(
-            wave_id=wave_id,
-            scheduled=n_sched,
-            admitted=n_admit,
-            fetched_ok=n_ok,
-            failed=n_failed,
-            discovered=n_disc,
-            dedup_hits=n_dedup,
-            images=n_images,
-            duration_ms=int((time.time() - t0) * 1000),
-        )
+        return {
+            "state": {"frontier": next_frontier, "host_state": new_host_state},
+            "appends": appends,
+            "resets": resets or None,
+            "observations": [wave_counts, expand_counts],
+        }
 
     # ------------------------------------------------------------- helpers
-    def _expand(self, ok: DataFrame, seen, blooms, wave_id: int):
+    def _pin(self, df: DataFrame) -> DataFrame:
+        """A lazy pin, planned without adaptive execution: its stages then
+        run inside the job of the first write that reads it, instead of as
+        one job per query stage at definition time.  The writes keep AQE,
+        which coalesces the small per-wave deltas into few files."""
+        with _session_conf(self.spark, {"spark.sql.adaptive.enabled": "false"}):
+            return df.localCheckpoint(eager=False)
+
+    def _frontier_rows(self, snap: dict) -> int:
+        n = snap.get("rows", {}).get("frontier")
+        if n is None:  # a snapshot committed before row counts were recorded
+            frontier = self.catalog.read("frontier", snap)
+            n = 0 if frontier is None else frontier.limit(1).count()
+        return n
+
+    @staticmethod
+    def _results_log(wave: DataFrame, wave_id: int) -> DataFrame:
+        """The wave's results (lineage-grade, not the payload): fetched
+        rows with their status, robots denials as 403 and config misses as
+        status 0, neither fetched."""
+        kind = F.col("_kind")
+        fetched = kind == _FETCHED
+        return wave.filter(kind != _CARRIED).select(
+            "url", "host", "depth", "parent_url",
+            F.when(fetched, F.col("status_code")).when(kind == _DENIED, F.lit(403))
+            .otherwise(F.lit(0)).alias("status_code"),
+            (fetched & F.col("success")).alias("success"),
+            F.when(fetched, F.col("scheduled_offset")).otherwise(F.lit(0.0)).alias("scheduled_offset"),
+            F.lit(wave_id).alias("wave_id"),
+        )
+
+    def _bloom(self, snap: dict, seen: DataFrame):
+        """(the bloom for the probe, reset baseline or None).  The bloom is
+        either the persisted shards merged on the driver (one collect job,
+        whose rows are also the version/geometry guard), or — when the
+        deltas could exceed ``BLOOM_BROADCAST_MAX_BYTES`` — the shard table
+        itself, for the cogrouped shard-local test.  Shards missing, built
+        by an older hash scheme or with a different geometry (resume across
+        an engine upgrade / JobConfig change) would give false NEGATIVES
+        that bypass the exact anti-join, so the whole bloom is rebuilt from
+        the seen table and committed as a reset baseline."""
+        cfg = self.cfg
+        if not cfg.use_bloom:
+            return None, None
+        blooms = self.catalog.read("bloom", snap)
+        geometry = (cfg.bloom_partitions, cfg.bloom_bits)
+        deltas = len(snap["appends"].get("bloom", ()))
+        if deltas * cfg.bloom_partitions * cfg.bloom_bits // 8 > BLOOM_BROADCAST_MAX_BYTES:
+            if bloom_version_ok(blooms, *geometry):
+                return blooms, None
+            rebuilt = build_bloom(seen, n_partitions=cfg.bloom_partitions, m_bits=cfg.bloom_bits)
+            return rebuilt, rebuilt
+        shards = None if blooms is None else bloom_shards(blooms, *geometry)
+        if shards is not None:
+            return shards, None
+        rows = build_bloom(seen, n_partitions=cfg.bloom_partitions, m_bits=cfg.bloom_bits).collect()
+        return merge_shard_rows(rows), self.spark.createDataFrame(rows, BLOOM_SCHEMA)
+
+    def _expand(self, ok: DataFrame, seen: DataFrame, bloom) -> DataFrame:
+        """PIN 2: the wave's discovered links — scrape + canonicalize (one
+        Python pass), per-wave dedup, then the seen-set probe — tagged with
+        ``dedup_hit``.  Pinned: the seen, bloom, frontier and lineage writes
+        all read it, and the Python pass must run once."""
         cfg = self.cfg
         ok = ok.filter(F.col("depth") + 1 <= cfg.max_depth)
         links = scrape.extract_links(ok, url_col="url", html_col="html", with_canon=True)
@@ -448,20 +509,23 @@ class CrawlJob:
         disc = disc.filter(F.col("canon").isNotNull() & is_valid_url_expr(F.col("href")))
         if cfg.filter_expr is not None:
             disc = disc.filter(cfg.filter_expr(F.col("href")))
+        if bloom is not None:
+            # the bloom verdict is a function of the URL alone, so it is
+            # taken before the per-wave dedup: the dedup's shuffle then
+            # feeds both probe branches and the bloom pass runs once
+            test = bloom_tag if isinstance(bloom, dict) else bloom_maybe_seen
+            disc = test(disc, bloom, "canon", n_partitions=cfg.bloom_partitions)
         disc = disc.dropDuplicates(["canon"])
-        # checkpoint BEFORE counting: the scrape+canonicalize UDF pass runs
-        # once; n_before and the anti-join both read the parquet
-        disc = self._ckpt(disc, f"disc_{wave_id}")
-        n_before = disc.count()
-        fresh = anti_join_seen(
-            disc, seen, url_col="canon", blooms=blooms, n_partitions=cfg.bloom_partitions
-        )
-        fresh = self._ckpt(fresh, f"fresh_{wave_id}")
-        n_fresh = fresh.count()
+        maybe_col = None if bloom is None else "maybe_seen"
+        return self._pin(tag_seen(disc, seen, url_col="canon", maybe_col=maybe_col))
+
+    def _new_rows(self, fresh: DataFrame, wave_id: int) -> DataFrame:
+        """Fresh discoveries as frontier rows."""
+        cfg = self.cfg
         score = (
             cfg.score_expr(F.col("canon")) if cfg.score_expr is not None else F.lit(0.0)
         ).cast("double")
-        new_rows = fresh.select(
+        return fresh.select(
             F.col("canon").alias("url"),
             F.hash("canon").alias("url_hash"),
             host_expr(F.col("canon")).alias("host"),
@@ -475,8 +539,6 @@ class CrawlJob:
             F.lit(wave_id).alias("wave_id"),
             F.lit("QUEUED").alias("status"),
         )
-        seen_delta = new_rows.select("url")
-        return new_rows, seen_delta, n_fresh, n_before - n_fresh
 
     def _emit_images(self, ok: DataFrame, wave_id: int) -> DataFrame:
         """Scrape <img> refs from fetched pages, look the payloads up in
@@ -497,7 +559,8 @@ class CrawlJob:
             F.col("alt").alias("caption"),
             "phash",
         ).dropDuplicates(["image_id"])
-        payload = self._ckpt(payload, f"img_payload_{wave_id}")
+        # pin: decode_and_validate and the join below both read it
+        payload = payload.localCheckpoint(eager=True)
         checks = decode_and_validate(payload)
         valid_ids = checks.filter("ok AND dims_match AND phash_matches").select("image_id")
         return payload.join(valid_ids, "image_id")
@@ -527,7 +590,8 @@ class CrawlJob:
         if prev is not None:
             emitted = prev.select(F.col("pdf_id").alias("doc_id")).distinct()
             payload = payload.join(emitted, "doc_id", "left_anti")
-        payload = self._ckpt(payload, f"pdf_payload_{wave_id}")
+        # pin: the pages and images fan-outs both read it
+        payload = payload.localCheckpoint(eager=True)
         pages = process_pdfs(payload).withColumnRenamed("doc_id", "pdf_id")
         images = extract_pdf_images(payload).withColumnRenamed("doc_id", "pdf_id")
         wid = F.lit(wave_id).cast("int").alias("wave_id")
@@ -550,31 +614,10 @@ class CrawlJob:
         md = markdown_for_pages(ok, content_filter=content_filter)
         return md.withColumn("wave_id", F.lit(wave_id))
 
-    def _crawled_so_far(self) -> int:
-        res = self.catalog.read("results")
-        if res is None:
-            return 0
-        return res.filter("success").count()
-
     def _empty_host_state(self) -> DataFrame:
         from .operators.scheduler import HOST_STATE_SCHEMA
 
         return self.spark.createDataFrame([], HOST_STATE_SCHEMA)
-
-    def _ckpt(self, df: DataFrame, name: str) -> DataFrame:
-        """Intra-wave pin: cut lineage + stop branch recompute.  These
-        intermediates never participate in resume (the snapshot is what
-        commit_wave writes), so an executor-local checkpoint suffices —
-        the parquet round-trip it replaces cost ~2-4 s/wave of the e2e
-        fixed overhead.  ``durable_tmp`` restores the parquet path (e.g.
-        for debugging a wave post-mortem)."""
-        if self.cfg.durable_tmp:
-            import os
-
-            path = os.path.join(self.catalog.root, "tmp", name)
-            df.write.mode("overwrite").parquet(path)
-            return self.spark.read.parquet(path)
-        return df.localCheckpoint(eager=True)
 
     # ------------------------------------------------------------- queries
     def seen_urls(self) -> DataFrame:

@@ -14,6 +14,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def box_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the host's)."""
+    return len(os.sched_getaffinity(0))
+
+
+def box_driver_memory() -> str:
+    """A quarter of RAM, at most 8 GB: in local mode every executor runs
+    inside the driver JVM, and the rest stays for the Python workers and
+    the page cache."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1, min(8, kb // 4 // (1 << 20)))}g"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "crawl4ai_spark",
@@ -23,11 +37,12 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     Parameters are overridable for benchmarks that compare parallelism
-    levels (local[8] vs local[32]) on identical input — the scaling
-    evidence required by BASELINE.md.
+    levels (local[1] vs local[4]) on identical input.  Defaults fit the
+    box: ``local[<affinity CPUs>]`` (or ``SPARK_GRAFT_CPUS``) and a driver
+    heap of a quarter of RAM, at most 8 GB (or ``SPARK_DRIVER_MEMORY``).
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or box_cpus()
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # match parallelism, not Spark's default 200: at local scale 200
@@ -48,7 +63,7 @@ def get_spark(
         # runtime bloom-filter joins: Spark's own bloom pushdown under
         # large anti/semi joins (complements our persisted seen-set bloom)
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or box_driver_memory())
         .config("spark.ui.enabled", "false")
         # JVM unified logging writes to STDOUT by default; under memory
         # pressure [warning][gc,alloc] GCLocker lines land in the middle

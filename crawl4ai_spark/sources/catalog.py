@@ -17,6 +17,9 @@ Iceberg-shaped so the swap is a config change:
 * every commit records per-partition lineage
   (wave_id, partition_id, urls_in, urls_out, dedup_hits, fetched,
   failed, duration_ms) — the north-rule metrics table.
+* every snapshot records the row count of each table its commit wrote and
+  the caller's counters, both taken from Observations on the writes
+  themselves (no counting job), in the same atomic manifest rename.
 """
 
 from __future__ import annotations
@@ -24,8 +27,9 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,9 +45,6 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("duration_ms", T.LongType()),
     ]
 )
-
-_STATE_TABLES = ("frontier", "host_state")  # rewritten per snapshot
-_APPEND_TABLES = ("seen", "images", "results", "lineage", "bloom", "markdown")  # per-wave deltas
 
 
 class SnapshotCatalog:
@@ -69,8 +70,11 @@ class SnapshotCatalog:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, self._manifest_path)  # atomic commit point
 
+    def snapshots(self) -> list[dict]:
+        return self._read_manifest()["snapshots"]
+
     def latest_snapshot(self) -> dict | None:
-        snaps = self._read_manifest()["snapshots"]
+        snaps = self.snapshots()
         return snaps[-1] if snaps else None
 
     # -- commit ------------------------------------------------------------
@@ -80,6 +84,7 @@ class SnapshotCatalog:
         state: dict[str, DataFrame] | None = None,
         appends: dict[str, DataFrame] | None = None,
         resets: dict[str, DataFrame] | None = None,
+        observations: list[Observation] | None = None,
     ) -> dict:
         """Write a wave's state + deltas, then atomically publish the
         snapshot. A crash before the manifest rename leaves the previous
@@ -88,26 +93,23 @@ class SnapshotCatalog:
         ``resets`` rewrites an append-table's whole history as one new
         baseline delta (compaction / format migration — e.g. a bloom
         rebuilt under a new hash scheme); prior delta files stay on disk
-        but drop out of the snapshot's read set."""
+        but drop out of the snapshot's read set.
+
+        The snapshot records, with no extra Spark job, ``rows``: the row
+        count of every table this commit wrote (state tables keep their
+        last count when not rewritten), and ``counters``: the metrics of
+        the caller's ``observations`` (Observations attached to the frames
+        written here), merged into one name -> int map.  The manifest keeps
+        each table's latest schema, for :meth:`read`."""
         snap = {"snapshot_id": wave_id, "wave_id": wave_id, "ts": time.time(), "tables": {}}
         prev = self.latest_snapshot()
         if prev:
             snap["tables"].update(prev["tables"])  # carry forward unreplaced state
             snap["appends"] = {k: list(v) for k, v in prev.get("appends", {}).items()}
+            rows = {k: v for k, v in prev.get("rows", {}).items() if k in prev["tables"]}
         else:
             snap["appends"] = {}
-
-        import sys
-        from concurrent.futures import ThreadPoolExecutor
-
-        prof = bool(os.environ.get("SPARK_CRAWL_PROFILE"))
-
-        def write(df, path):
-            t = time.time()
-            df.write.mode("overwrite").parquet(path)
-            if prof:
-                print(f"    commit write {path.split('/')[-2]}: {time.time() - t:.2f}s",
-                      file=sys.stderr, flush=True)
+            rows = {}
 
         # the snapshot's tables are independent — write them CONCURRENTLY
         # (Spark actions are thread-safe per session); the manifest rename
@@ -116,47 +118,70 @@ class SnapshotCatalog:
         todo: list[tuple] = []
         for name, df in (state or {}).items():
             path = os.path.join(self.root, name, f"snap={wave_id}")
-            todo.append((df, path))
+            todo.append((name, df, path))
             snap["tables"][name] = path
         for name, df in (appends or {}).items():
             path = os.path.join(self.root, name, f"wave={wave_id}")
-            todo.append((df, path))
+            todo.append((name, df, path))
             snap["appends"].setdefault(name, []).append(path)
         for name, df in (resets or {}).items():
             path = os.path.join(self.root, name, f"reset={wave_id}")
-            todo.append((df, path))
+            todo.append((name, df, path))
             snap["appends"][name] = [path]
-        if len(todo) > 1:
-            with ThreadPoolExecutor(max_workers=min(len(todo), 6)) as ex:
-                futures = [ex.submit(write, df, path) for df, path in todo]
+        # every write counts its own rows: an Observation on the frame
+        # being written, so the count rides the write's last stage
+        observed = [(name, df, path, Observation()) for name, df, path in todo]
+        schemas = {name: df.schema.json() for name, df, _ in todo}
+        writes = [(df.observe(obs, F.count(F.lit(1)).alias("rows")), path)
+                  for _, df, path, obs in observed]
+        if len(writes) > 1:
+            with ThreadPoolExecutor(max_workers=min(len(writes), 6)) as ex:
+                futures = [ex.submit(_write, df, path) for df, path in writes]
                 for f in futures:
                     f.result()  # propagate the first failure before publishing
         else:
-            for df, path in todo:
-                write(df, path)
+            for df, path in writes:
+                _write(df, path)
+        for name, _, _, obs in observed:
+            rows[name] = int(obs.get["rows"])
+        snap["rows"] = rows
+        counters: dict[str, int] = {}
+        for obs in observations or ():
+            counters.update({k: int(v or 0) for k, v in obs.get.items()})
+        snap["counters"] = counters
 
         manifest = self._read_manifest()
         manifest["snapshots"].append(snap)
+        manifest.setdefault("schemas", {}).update(schemas)
         self._write_manifest(manifest)
         return snap
 
     # -- read --------------------------------------------------------------
     def read(self, name: str, snapshot: dict | None = None) -> DataFrame | None:
+        """The table as of ``snapshot`` (default: the latest).  The schema
+        the manifest recorded is passed to the reader, which then skips the
+        footer-inference job a bare ``read.parquet`` runs."""
         snap = snapshot or self.latest_snapshot()
         if snap is None:
             return None
-        if name in snap["tables"]:
-            return self.spark.read.parquet(snap["tables"][name])
-        paths = snap.get("appends", {}).get(name)
+        paths = [snap["tables"][name]] if name in snap["tables"] else snap.get("appends", {}).get(name)
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        reader = self.spark.read
+        schema = self._read_manifest().get("schemas", {}).get(name)
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
+        return reader.parquet(*paths)
 
     def lineage(self) -> DataFrame:
         df = self.read("lineage")
         if df is None:
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
         return df
+
+
+def _write(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
 
 
 def lineage_from_wave(
@@ -166,38 +191,43 @@ def lineage_from_wave(
 ) -> DataFrame:
     """Per-partition lineage aggregate for one wave.
 
-    `urls_in` counts frontier rows per partition; `urls_out` / `dedup_hits`
-    come from the expansion stage (rows tagged with `dedup_hit` boolean
-    before the seen anti-join filtered them).
+    `urls_in` / `fetched` / `failed` count ``frontier_df`` rows per
+    partition (``status`` FAILED or not); `urls_out` / `dedup_hits` count
+    the expansion rows per partition, tagged with the ``dedup_hit``
+    boolean the seen-set probe set (True: already seen).  Both inputs are
+    tagged with their own partition id and folded by ONE aggregation, so
+    a wave's lineage costs one shuffle.  `duration_ms` is 0: a partition
+    has no wall time of its own (the wave's is in ``WaveStats``).
     """
-    fin = (
-        frontier_df.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("urls_in"),
-            F.sum(F.when(F.col("status") == "FAILED", 1).otherwise(0)).alias("failed"),
-            F.sum(F.when(F.col("status") != "FAILED", 1).otherwise(0)).alias("fetched"),
+    zero = F.lit(0).cast("long")
+    one = F.lit(1).cast("long")
+    parts = [
+        frontier_df.select(
+            F.spark_partition_id().alias("partition_id"),
+            one.alias("urls_in"),
+            zero.alias("urls_out"),
+            zero.alias("dedup_hits"),
+            F.when(F.col("status") != "FAILED", one).otherwise(zero).alias("fetched"),
+            F.when(F.col("status") == "FAILED", one).otherwise(zero).alias("failed"),
         )
-    )
+    ]
     if expanded_df is not None:
-        out = (
-            expanded_df.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(
-                F.sum(F.when(~F.col("dedup_hit"), 1).otherwise(0)).alias("urls_out"),
-                F.sum(F.when(F.col("dedup_hit"), 1).otherwise(0)).alias("dedup_hits"),
+        parts.append(
+            expanded_df.select(
+                F.spark_partition_id().alias("partition_id"),
+                zero.alias("urls_in"),
+                F.when(~F.col("dedup_hit"), one).otherwise(zero).alias("urls_out"),
+                F.when(F.col("dedup_hit"), one).otherwise(zero).alias("dedup_hits"),
+                zero.alias("fetched"),
+                zero.alias("failed"),
             )
         )
-        fin = fin.join(out, "partition_id", "full_outer")
-    else:
-        fin = fin.withColumn("urls_out", F.lit(0)).withColumn("dedup_hits", F.lit(0))
-    return fin.select(
+    rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    return rows.groupBy("partition_id").agg(
+        *[F.sum(c).cast("long").alias(c) for c in ("urls_in", "urls_out", "dedup_hits", "fetched", "failed")]
+    ).select(
         F.lit(wave_id).cast("int").alias("wave_id"),
         F.col("partition_id").cast("int"),
-        F.coalesce("urls_in", F.lit(0)).cast("long").alias("urls_in"),
-        F.coalesce("urls_out", F.lit(0)).cast("long").alias("urls_out"),
-        F.coalesce("dedup_hits", F.lit(0)).cast("long").alias("dedup_hits"),
-        F.coalesce("fetched", F.lit(0)).cast("long").alias("fetched"),
-        F.coalesce("failed", F.lit(0)).cast("long").alias("failed"),
-        F.lit(0).cast("long").alias("duration_ms"),
+        "urls_in", "urls_out", "dedup_hits", "fetched", "failed",
+        zero.alias("duration_ms"),
     )

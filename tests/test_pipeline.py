@@ -27,7 +27,7 @@ def world(spark):
 
 def make_job(spark, world, root, **cfg_kw):
     cfg = JobConfig(
-        max_depth=3,
+        max_depth=cfg_kw.pop("max_depth", 3),
         wave_budget=100.0,
         default_delay=1.0,
         use_bloom=cfg_kw.pop("use_bloom", True),
@@ -114,10 +114,144 @@ def test_job_lineage(finished):
     job, summary = finished
     lin = job.lineage()
     assert lin.count() > 0
-    agg = lin.agg(F.sum("urls_in").alias("in"), F.sum("dedup_hits").alias("dh")).collect()[0]
+    agg = lin.agg(
+        F.sum("urls_in").alias("in"), F.sum("dedup_hits").alias("dh"), F.sum("urls_out").alias("out")
+    ).collect()[0]
     assert agg["in"] >= summary["pages_crawled"]
     # corpus contains duplicate hrefs by construction → dedup hits observed
     assert agg["dh"] > 0
+    # the per-partition counters add up to the wave counters
+    assert agg["out"] == sum(s.discovered for s in job.stats)
+    assert agg["dh"] == sum(s.dedup_hits for s in job.stats)
+
+
+def test_seed_refuses_used_catalog_root(spark, world, finished):
+    """A commit carries the previous snapshot's appends forward, so a
+    second seed() into a used root would inherit its seen set."""
+    job, _ = finished
+    with pytest.raises(ValueError, match="already holds a crawl"):
+        make_job(spark, world, job.catalog.root).seed(world["seeds"])
+
+
+def _flaky_fetcher(spark, corpus, counter=None):
+    """Corpus fetch with deterministic flakiness keyed on the page index:
+    i%5==2 → always 503 (gives up), i%3==1 → one 429 then the page.  With
+    ``counter`` every input row of the fetch is counted by a Python
+    mapInPandas, i.e. once per evaluation of the fetch."""
+    from crawl4ai_spark.functions.urls import normalize_deep_udf
+
+    pages = spark.createDataFrame(corpus["pages"])
+    src = pages.select(
+        normalize_deep_udf(F.col("url"), F.col("url")).alias("_p"), "html",
+        F.col("status_code").alias("_sc"),
+    ).dropDuplicates(["_p"]).cache()
+
+    def fetch(wave):
+        if counter is not None:
+            def count(batches):
+                for pdf in batches:
+                    counter.add(len(pdf))
+                    yield pdf
+
+            wave = wave.mapInPandas(count, wave.schema)
+        j = wave.join(src, wave["url"] == src["_p"], "left")
+        ix = F.regexp_extract(F.col("url"), r"/p(\d+)$", 1)
+        i = F.when(ix == "", F.lit(0)).otherwise(ix.cast("int"))
+        status = (
+            F.when(F.col("_p").isNull(), F.lit(404))
+            .when(i % 5 == 2, F.lit(503))
+            .when((i % 3 == 1) & (F.col("retry_count") < 1), F.lit(429))
+            .otherwise(F.col("_sc"))
+        )
+        return j.withColumn("status_code", status).withColumn(
+            "success", F.col("_p").isNotNull() & (F.col("status_code") == 200)
+        ).drop("_p", "_sc")
+
+    return fetch
+
+
+@pytest.fixture(scope="module")
+def retry_job(spark, tmp_path_factory):
+    """3 waves over a world with robots denials, 429/503 retries and a
+    tight politeness budget (carried rows), the fetch counted per row."""
+    corpus = generate_corpus(seed=42, n_hosts=5, pages_per_host=8, with_images=False)
+    fetched_rows = spark.sparkContext.accumulator(0)
+    cfg = JobConfig(max_depth=3, wave_budget=3.0, default_delay=1.0, max_retries=1,
+                    use_bloom=True, bloom_partitions=4, bloom_bits=1 << 14, emit_images=False)
+    job = CrawlJob(spark, _flaky_fetcher(spark, corpus, fetched_rows),
+                   catalog_root=str(tmp_path_factory.mktemp("crawl_retry")), config=cfg,
+                   robots=spark.createDataFrame(corpus["robots"]))
+    job.seed(spark.createDataFrame(corpus["seeds"]))
+    job.run(max_waves=3)
+    return job, fetched_rows
+
+
+def test_wave_counters_match_catalog_recount(retry_job):
+    """Every observed WaveStats counter equals a recount from what the
+    wave committed: the results log, the frontier snapshots, lineage."""
+    job, _ = retry_job
+    assert [s.wave_id for s in job.stats] == [1, 2, 3]
+    snaps = {s["wave_id"]: s for s in job.catalog.snapshots()}
+    results = job.results()
+    max_retries = job.cfg.max_retries
+    seen_kinds = set()
+    for st in job.stats:
+        w = st.wave_id
+        prev_frontier = job.catalog.read("frontier", snaps[w - 1])
+        res = results.filter(F.col("wave_id") == w).join(
+            prev_frontier.select("url", "retry_count"), "url"
+        )
+        denied = res.filter(F.col("status_code") == 403).count()  # fetches never return 403 here
+        fetched = res.filter(F.col("status_code") != 403)
+        retried = fetched.filter(
+            F.col("status_code").isin(429, 503) & (F.col("retry_count") < max_retries)
+        ).count()
+        assert st.scheduled == prev_frontier.count() - denied, w
+        assert st.admitted == fetched.count(), w
+        assert st.fetched_ok == res.filter("success").count(), w
+        assert st.failed == res.filter(~F.col("success")).count() - retried, w
+        new_frontier = job.catalog.read("frontier", snaps[w])
+        assert st.discovered == new_frontier.filter(F.col("wave_id") == w).count(), w
+        lin = job.lineage().filter(F.col("wave_id") == w).agg(
+            F.sum("urls_out").alias("out"), F.sum("dedup_hits").alias("dh")).first()
+        assert (st.discovered, st.dedup_hits) == (lin["out"], lin["dh"]), w
+        assert snaps[w]["rows"]["frontier"] == new_frontier.count()
+        seen_kinds |= {"denied"} if denied else set()
+        seen_kinds |= {"retried"} if retried else set()
+        seen_kinds |= {"carried"} if st.scheduled > st.admitted else set()
+    # the world really exercised every kind of wave row
+    assert seen_kinds == {"denied", "retried", "carried"}
+
+
+def test_each_admitted_row_fetched_once(retry_job):
+    """The fetch (the network, in production) runs once per admitted row:
+    the pinned wave frame feeds every write that needs fetched rows."""
+    job, fetched_rows = retry_job
+    assert fetched_rows.value == sum(s.admitted for s in job.stats) > 0
+
+
+def test_expand_pass_runs_once_per_page(spark, world, tmp_path, monkeypatch):
+    """The scrape + canonicalize Python pass sees each fetched page once:
+    the pinned expansion feeds the seen, bloom, frontier and lineage
+    writes."""
+    from crawl4ai_spark.operators import scrape
+
+    pages_in = spark.sparkContext.accumulator(0)
+    extract = scrape.extract_links
+
+    def counted(pages, *a, **kw):
+        def count(batches):
+            for pdf in batches:
+                pages_in.add(len(pdf))
+                yield pdf
+
+        return extract(pages.mapInPandas(count, pages.schema), *a, **kw)
+
+    monkeypatch.setattr(scrape, "extract_links", counted)
+    job = make_job(spark, world, str(tmp_path / "cat"), emit_images=False, max_depth=10)
+    job.seed(world["seeds"])
+    job.run(max_waves=3)
+    assert pages_in.value == sum(s.fetched_ok for s in job.stats) > 0
 
 
 def test_job_resume_equals_single_run(spark, world, tmp_path_factory, finished):
@@ -142,6 +276,21 @@ def test_job_bloom_off_equivalence(spark, world, tmp_path_factory, finished):
     job_a, _ = finished
     root = str(tmp_path_factory.mktemp("crawl_nobloom"))
     job = make_job(spark, world, root, use_bloom=False)
+    job.seed(world["seeds"])
+    job.run(max_waves=12)
+    assert {r["url"] for r in job.seen_urls().collect()} == {
+        r["url"] for r in job_a.seen_urls().collect()
+    }
+
+
+def test_job_cogrouped_bloom_equivalence(spark, world, tmp_path_factory, finished, monkeypatch):
+    """A bloom too big to merge on the driver is tested shard-locally
+    (cogroup): same seen set as the broadcast probe."""
+    import crawl4ai_spark.pipeline as pipeline
+
+    monkeypatch.setattr(pipeline, "BLOOM_BROADCAST_MAX_BYTES", 0)
+    job_a, _ = finished
+    job = make_job(spark, world, str(tmp_path_factory.mktemp("crawl_cogroup")))
     job.seed(world["seeds"])
     job.run(max_waves=12)
     assert {r["url"] for r in job.seen_urls().collect()} == {
